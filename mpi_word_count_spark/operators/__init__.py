@@ -30,6 +30,22 @@ def track_releaser(fn) -> None:
     _TRACKED_RELEASERS.append(fn)
 
 
+def _unpersist_local_ckpt(df: DataFrame) -> None:
+    """Free a localCheckpoint'ed DataFrame's storage blocks NOW.
+
+    localCheckpoint keeps its materialized RDD cached with no public
+    DataFrame-level unpersist; orphaned rounds otherwise sit in the
+    block manager until a JVM GC lets the ContextCleaner notice them —
+    measured as episodic multi-second stalls in later queries of a
+    long session. Reaches the RDD through LogicalRDD (non-public
+    accessor, hence the broad guard: worst case blocks free on GC as
+    before)."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
 def release_caches() -> int:
     """Unpersist every tracked cache and run every tracked releaser;
     returns how many were released.
@@ -50,11 +66,7 @@ def release_caches() -> int:
     return n
 
 
-def widen(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    probe: DataFrame | None = None,
-) -> DataFrame:
+def widen(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     """Ensure CPU-heavy per-row operators get full parallelism.
 
     Small parquet inputs scan as 1-2 tasks (row-group granularity), so
@@ -76,8 +88,7 @@ def widen(
     planner (word_count_mpi.c:246-255): equalize work across workers
     before the expensive scan loop.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     src = probe if probe is not None else df
     if src.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mpi_word_count_spark.functions.hashing import hash32, hash60
+from mpi_word_count_spark.operators import _unpersist_local_ckpt
 from mpi_word_count_spark.tokenizer import DEFAULT_DELIMITERS, delimiter_regex
 
 # MinHash/LSH default geometry: 16 hash functions, 8 bands × 2 rows.
@@ -512,22 +513,6 @@ def minhash_lsh_pairs(
         id_col,
         text_col,
     )
-
-
-def _unpersist_local_ckpt(df: DataFrame) -> None:
-    """Free a localCheckpoint'ed DataFrame's storage blocks NOW.
-
-    localCheckpoint keeps its materialized RDD cached with no public
-    DataFrame-level unpersist; orphaned rounds otherwise sit in the
-    block manager until a JVM GC lets the ContextCleaner notice them —
-    measured as episodic multi-second stalls in later queries of a
-    long session. Reaches the RDD through LogicalRDD (non-public
-    accessor, hence the broad guard: worst case blocks free on GC as
-    before)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def dup_clusters(

@@ -20,7 +20,7 @@ end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Successive mask-spreading rounds: after all four, the low 16 bits of
@@ -50,14 +50,6 @@ def morton_key_sql(x_expr: str, y_expr: str) -> str:
     """SQL text of the Morton key interleaving two ≤16-bit values:
     x in even bits, y in odd bits. Same text runs on both engines."""
     return f"({spread_bits_sql(x_expr)} | ({spread_bits_sql(y_expr)} << 1))"
-
-
-def morton_key(x: Column | str, y: Column | str) -> Column:
-    """Spark column form of morton_key_sql (via F.expr so the shift
-    amounts stay SQL-side)."""
-    xn = x if isinstance(x, str) else x._jc.toString()  # pragma: no cover
-    yn = y if isinstance(y, str) else y._jc.toString()  # pragma: no cover
-    return F.expr(morton_key_sql(xn, yn))
 
 
 def py_morton(x: int, y: int) -> int:

@@ -1411,7 +1411,11 @@ def _rrf_oracle() -> str:
     """
 
 
-def _rrf_use_index(sf_dir: str) -> bool:
+# Documents input size from which the RRF positional index is built.
+RRF_INDEX_MIN_BYTES = 4 * 1024 * 1024
+
+
+def _rrf_use_index(spark: SparkSession, sf_dir: str) -> bool:
     """Size-adaptive switch for the RRF positional-index
     materialization (guide §2: scale-dependent decisions derive from
     input size, never from a local-mode constant). Measured crossover
@@ -1419,30 +1423,18 @@ def _rrf_use_index(sf_dir: str) -> bool:
     is ~0.3 s faster on the 0.6 MB sf0.1 fixture, the materialized
     index is 1.4–1.5× faster from 5 MB of documents up (and the
     inline DAG turns unstable at 16 MB — 24–43 s outlier runs from 24
-    concurrent corpus scans). Default threshold 4 MiB sits just under
-    the measured win; production corpora are far above it, so
+    concurrent corpus scans). RRF_INDEX_MIN_BYTES (4 MiB) sits just
+    under the measured win; production corpora are far above it, so
     materialization IS the production path — the inline body is the
-    small-input fast path. Overrides for tests/measurement:
-    SPARK_GRAFT_RRF_INDEX=force|off|auto,
-    SPARK_GRAFT_RRF_INDEX_MIN_BYTES."""
+    small-input fast path. The size is read through the Hadoop
+    FileSystem of the path, so non-local sf_dirs measure correctly."""
     import os
 
-    mode = os.environ.get("SPARK_GRAFT_RRF_INDEX", "auto")
-    if mode == "force":
-        return True
-    if mode == "off":
-        return False
-    min_bytes = int(
-        os.environ.get("SPARK_GRAFT_RRF_INDEX_MIN_BYTES", str(4 * 1024 * 1024))
-    )
+    sc = spark.sparkContext
     src = os.path.join(sf_dir, "documents.parquet")
-    size = 0
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    elif os.path.exists(src):
-        size = os.path.getsize(src)
-    return size >= min_bytes
+    path = sc._jvm.org.apache.hadoop.fs.Path(src)
+    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    return fs.getContentSummary(path).getLength() >= RRF_INDEX_MIN_BYTES
 
 
 def _rrf_compact_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1556,6 +1548,12 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB (round-4 verdict). The final top-k IS a plain
     orderBy().limit() heap.
     """
+    return _hybrid_rrf(spark, sf_dir, use_index=_rrf_use_index(spark, sf_dir))
+
+
+def _hybrid_rrf(spark: SparkSession, sf_dir: str, use_index: bool) -> DataFrame:
+    """hybrid_rrf_retrieval's body: the materialized-index plan when
+    `use_index`, else the inline plan. Both give the same result."""
     from mpi_word_count_spark.operators.dedup import tokens_col
     from mpi_word_count_spark.operators.ranking import bucketed_global_rank
     from mpi_word_count_spark.tokenizer import tokenize
@@ -1571,7 +1569,7 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(idf * F.col("tf") * (BM25_K1 + 1.0) / denom), 4
     ).alias("bm25")
 
-    if _rrf_use_index(sf_dir):
+    if use_index:
         # --- index path: everything from the materialized index -----
         compact = _rrf_compact_index(spark, sf_dir)
         stats = compact.filter(F.col("len") > 0).agg(

@@ -54,924 +54,9 @@ def sql_regex() -> str:
 
 _LOADED = False
 
-# Driver-verification priority: the per-round correctness harness checks
-# registry entries in insertion order with a bounded budget, so queries
-# that have never had a CORRECTNESS row (dark through round 2) and queries
-# whose defects were fixed this round come FIRST; long-green queries take
-# the later slots and rotate back in on subsequent rounds.
-_PRIORITY = [
-    # --- the 50-row driver budget, round 10 --------------------------
-    # VERDICT r9 item 2: drain the r4 ledger vintage. Budget = flagship
-    # + the 23 round-10 additions (4 session-1 + 19 session-2) +
-    # embedding_pca_power (exact-integer recurrence rework this round)
-    # + the r4-vintage queries in insertion order up to the 50-row cut
-    # (25 of 39 fit; the last fourteen r4 rows roll to r11 with the r5
-    # rows
-    # — never-verified queries outrank stale-but-judge-reswept rows;
-    # judge independently re-verified 40 of the r4/r5 set green in r9,
-    # so none is suspected wrong — the evidence is old).
-    # flagship: a fresh row EVERY round, whatever else rotates
-    "wordcount",
-    # round-10 new queries (session 1)
-    "incremental_embedding_dups",
-    "byte_bpe_merges",
-    "byte_bpe_token_counts",
-    "streaming_embedding_dedup",
-    # round-10 new queries (session 2: time-series diagnostics,
-    # Aho-Corasick lexicon scan, link prediction, Naive Bayes)
-    "events_autocorrelation",
-    "event_transition_matrix",
-    "term_scan_census",
-    "supplier_link_prediction",
-    "naive_bayes_confusion",
-    "brand_price_mad_outliers",
-    "trade_graph_sssp",
-    "cohort_retention",
-    "events_cusum_changepoint",
-    "theil_sen_trend",
-    "trade_graph_hits",
-    "als_customer_factors",
-    "revenue_gini",
-    "supplier_hhi",
-    "mann_kendall_trend",
-    "hourly_seasonality_strength",
-    "runs_test",
-    "ql_dirichlet_scores",
-    "event_hour_chi2",
-    # changed implementation this round (integer power iteration)
-    "embedding_pca_power",
-    # stale rotation: ALL 39 rows whose newest driver row is round 4
-    "blocklist_filter_stats",
-    "bloom_prefilter_stats",
-    "cms_word_counts",
-    "cogrouped_user_totals",
-    "corpus_mixture",
-    "csv_roundtrip",
-    "curation_funnel",
-    "duplicate_passages",
-    "edit_distance_dups",
-    "event_gaps",
-    "events_hourly_gapfill",
-    "events_json_buckets",
-    "events_last_order_asof",
-    "events_variant_stats",
-    "events_zorder_keys",
-    "hll_sketch_rollup",
-    "html_boilerplate_strip",
-    "incremental_exact_dedup",
-    "overlapping_order_pairs",
-    "partitioned_events_rollup",
-    "passage_dup_spans",
-    "q20_excess_suppliers",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "quota_sample_per_source",
-    "repetition_scores",
-    "scd2_customer_upsert",
-    "streaming_click_attribution",
-    "streaming_enriched_counts",
-    "streaming_session_counts",
-    "streaming_sliding_counts",
-    "streaming_stateful_totals",
-    "streaming_tumbling_counts",
-    "trade_graph_kcore",
-    "unicode_nfc_stats",
-    "url_domain_stats",
-    "user_erasure_audit",
-    "user_session_counts",
-    # (the 5 alphabetical-head r5 rows budgeted early in the round were
-    # displaced by the 5 session-2 additions — never-verified queries
-    # outrank stale-but-judge-reswept rows; all r5 rows roll to r11)
-    # --- the 50-row driver budget, round 9 (history) ------------------
-    # VERDICT r8 item 3 + session-2 additions. Budget = flagship + the
-    # 19 round-9 additions (2 subword-regularization, then the 17
-    # session-2 queries: privacy, distributed stats, WordPiece,
-    # retrieval/model eval, LPA communities, PCA, forensics,
-    # readability, streaming Holt — every one driver-dark until now)
-    # + media_decode_census / media_dimensions_stats (changed decode
-    # paths) + the stalest ledger rows (round-3 vintage) up to the
-    # 50-row cut. The round-4 rotation below the cut rolls to r10.
-    # flagship: a fresh row EVERY round, whatever else rotates
-    "wordcount",
-    # round-9 new queries (k-best subword regularization)
-    "unigram_nbest_segments",
-    "unigram_sampled_segments",
-    # round-9 new queries (privacy: k-anon ladder, central + local DP)
-    "k_anonymity_audit",
-    "dp_event_counts",
-    "dp_randomized_response",
-    # round-9 new queries (distributed statistics)
-    "poisson_bootstrap_ci",
-    "price_ols_model",
-    # round-9 new query (tokenizer triad completion)
-    "wordpiece_segment_stats",
-    # round-9 new query (retrieval evaluation suite)
-    "retrieval_eval_metrics",
-    # round-9 new query (Holt double-exponential smoothing)
-    "events_holt_trend",
-    # round-9 new query (k-fold CV by sufficient-statistic subtraction)
-    "price_ols_cv",
-    # round-9 new query (label-propagation communities)
-    "trade_graph_communities",
-    # round-9 new queries (Benford forensics, readability)
-    "benford_price_audit",
-    "readability_scores",
-    # round-9 new query (PCA on Gram sufficient statistics)
-    "embedding_pca_power",
-    # round-9 new queries (model-eval: AUC, WOE/IV)
-    "value_auc_audit",
-    "woe_value_bands",
-    # round-9 new query (stateful streaming forecast twin)
-    "streaming_holt_forecast",
-    # round-9 new query (two-sample KS test)
-    "value_ks_test",
-    # changed decode path this round (multiscan guard)
-    "media_decode_census",
-    # stale rotation: last driver row in round 3 (25 queries)
-    "packed_sequences",
-    "q10_returned_items",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_bracket_revenue",
-    "q22_dormant_rich_customers",
-    "q4_late_order_priority",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q8_market_share",
-    "quality_scores",
-    "salted_wordcount",
-    "scalar_function_sampler",
-    "scrubbed_docs",
-    "simhash_dups",
-    "sql_wordcount",
-    "streaming_dedup",
-    "tfidf_top_terms",
-    "token_stats",
-    "word_doc_frequency",
-    "wordcount_compat",
-    "wordcount_per_doc",
-    "wordcount_topk",
-    # stale rotation: last driver row in round 4 (oldest 21)
-    "ann_lsh_partitioned",
-    "approx_distinct_words",
-    "approx_value_quantiles",
-    "benchmark_contamination",
-    "blocklist_filter_stats",
-    "bloom_prefilter_stats",
-    "cms_word_counts",
-    "cogrouped_user_totals",
-    "corpus_mixture",
-    "csv_roundtrip",
-    "curation_funnel",
-    "duplicate_passages",
-    "edit_distance_dups",
-    "event_gaps",
-    "events_hourly_gapfill",
-    "events_json_buckets",
-    "events_last_order_asof",
-    "events_variant_stats",
-    "events_zorder_keys",
-    "hll_sketch_rollup",
-    # changed implementation (12-bit JPEG in the format rotation)
-    "media_dimensions_stats",
-    # --- the 50-row driver budget, round 8 (now overflow) -------------
-    # VERDICT r7 item 2: the 5 round-7 queries that have judge-green
-    # but no driver row yet lead; then round-8 additions (unigram EM,
-    # media decode census) and the media queries whose decode paths
-    # changed with this round's codec fixes (ADVICE r7: AVI per-strl
-    # strf, GIF first-frame compositing, top-down DIB; plus LZW TIFF
-    # and MP4 stsd codec ids); backfill = longest-unverified rotation
-    # (every row below last driver-verified in round 2, then the
-    # oldest round-3 rows). never-verified queue stays at 0.
-    # flagship: a fresh row EVERY round, whatever else rotates
-    "wordcount",
-    # round-7 additions, judge-green r7, driver-dark until now
-    "gopher_quality_flags",
-    "video_frame_stats",
-    "media_dimensions_stats",
-    "audio_window_stats",
-    "unigram_segment_stats",
-    # round-8 new queries
-    "unigram_em_vocab",
-    "unigram_em_segment_stats",
-    "media_decode_census",
-    "media_codec_ids",
-    # decode-path consumers of this round's codec changes
-    "media_phash",
-    "media_phash_dups",
-    "media_frames",
-    "media_features",
-    # stale rotation: last driver row in round 2 (23 queries)
-    "ann_bruteforce",
-    "ann_lsh",
-    "ann_lsh_multiprobe",
-    "brand_revenue",
-    "churned_customers_9596",
-    "customer_order_counts_outer",
-    "customers_with_urgent_orders",
-    "customers_without_orders",
-    "lineitem_cube",
-    "lineitem_part_price_band",
-    "orders_by_month",
-    "orders_rollup",
-    "orders_status_pivot",
-    "priority_status_sets",
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_regional_revenue",
-    "repeat_customers_9596",
-    "running_revenue_per_supplier",
-    "simhash_banded_dups",
-    "simhash_fingerprints",
-    "streaming_wordcount",
-    "top3_orders_per_customer",
-    # stale rotation: last driver row in round 3 (first 13)
-    "ann_ivf",
-    "bigram_counts",
-    "bigram_pmi",
-    "clean_corpus_summary",
-    "customer_order_zscores",
-    "doc_chunks",
-    "doc_fingerprints",
-    "embedding_dups",
-    "exact_dedup",
-    "grouping_sets_revenue",
-    "hash_sample_documents",
-    "lang_id",
-    "order_price_percentiles",
-    # --- the 50-row driver budget, round 7 ---------------------------
-    # The final evidence-debt drain (VERDICT r6 item 1): the flagship +
-    # ALL 41 never-driver-verified queries (each already judge-green at
-    # sf0.01 in the round-6 independent sweep) + the 8 queries whose
-    # implementations changed this round (the two paid-down refactors:
-    # shared exact-Jaccard verification and shared ADC+rerank tail; the
-    # fixed-dim pooled feature). Drains never-verified 41 -> 0.
-    # flagship: a fresh row EVERY round, whatever else rotates
-    "wordcount",
-    # the 41 never-verified queries, VERDICT r6 order
-    "ann_recall_audit",
-    "ann_recall_ladder",
-    "bpe_fertility_by_lang",
-    "char_entropy_scores",
-    "cluster_survivors",
-    "containment_dups",
-    "dau_wau",
-    "doc_novelty_scores",
-    "embedding_dim_stats",
-    "event_type_transitions",
-    "events_cusum_drift",
-    "events_seasonal_anomalies",
-    "events_value_outliers",
-    "greedy_source_coverage",
-    "hof_array_sampler",
-    "incremental_wordcount",
-    "keyword_pagerank",
-    "lang_confusion_matrix",
-    "lang_source_pmi",
-    "lateral_order_stats",
-    "minhash_estimate_audit",
-    "mixture_plan",
-    "model_quality_scores",
-    "positional_index",
-    "ppjoin_dups",
-    "ship_latency_percentiles",
-    "sorted_neighborhood_dups",
-    "source_overlap_matrix",
-    "split_leakage_audit",
-    "streaming_model_scores",
-    "streaming_synth_wordcount",
-    "streaming_trending_words",
-    "stupid_backoff_scores",
-    "supplier_basket_rules",
-    "supplier_graph_triangles",
-    "token_budget_selection",
-    "trade_graph_degrees",
-    "transition_dwell_times",
-    "udtf_char_ngrams",
-    "user_retention_cohorts",
-    "vocab_growth",
-    # round-7 implementation changes (fresh row after any change):
-    # shared exact-Jaccard verification helper touches these three...
-    "ngram_jaccard_dups",
-    "minhash_lsh_dups",
-    "incremental_minhash_dups",
-    # ...and their minhash_lsh_pairs-consuming cluster queries
-    "dedup_clusters",
-    "dedup_clusters_twostar",
-    # shared ADC-scoring + exact-rerank tail
-    "ann_pq",
-    "ann_ivfpq",
-    # fixed-dim pooled feature kernel (identity on the fake path, but
-    # the protocol is a fresh row after any implementation change)
-    "media_features",
-    # --- below the budget line: round-8 rotation leads ----------------
-    # new in round 7 (positions 51+: the 50-row budget is fully spoken
-    # for by the debt drain + changed impls; triple-sweep green
-    # locally, first in line for a driver row next round)
-    "gopher_quality_flags",
-    "video_frame_stats",
-    "media_dimensions_stats",
-    "audio_window_stats",
-    "unigram_segment_stats",
-    # --- the 50-row driver budget, round 6 ---------------------------
-    # Names can repeat further down (dict insertion keeps the FIRST
-    # position), so this head block is exactly the round-6 budget; the
-    # earlier round blocks below become the overflow tail. 86/251
-    # queries had no driver row after round 5 (VERDICT r5 item 1); this
-    # head is the flagship + the one query rewritten in round 5 that
-    # still carries only pre-rewrite rows (order_price_deciles, NTILE
-    # decomposition) + the first 48 never-verified entries in the
-    # verdict's order (round-5-new ops first, then the alphabetical
-    # tail). Drains never-verified 86 -> 38.
-    # flagship: a fresh row EVERY round, whatever else rotates
-    "wordcount",
-    # rewritten in r5 (global NTILE -> grouped bucket-offset rank);
-    # its only rows (r1/r2) predate the rewrite
-    "order_price_deciles",
-    # rewritten in r6 (global scalar window -> 1-row broadcast
-    # aggregate, the plan-guard fix); prior rows predate the rewrite
-    "q11_important_parts",
-    "q15_top_suppliers",
-    # changed in r6 (short-doc degenerate-window fallback; identical
-    # on fixture data — oracle changed in lockstep — but the protocol
-    # is a fresh row after any implementation change)
-    "winnowing_dups",
-    # round-5-new ops + rewritten NTILE consumers (VERDICT r5 item 1)
-    "training_shard_manifest",
-    "dsir_importance_weights",
-    "dsir_gumbel_sample",
-    "ccnet_perplexity_buckets",
-    "cdc_chunk_dups",
-    "margin_knn_alignment",
-    "model_calibration_bins",
-    "packing_efficiency_audit",
-    "customer_rfm_segments",
-    "curriculum_layout_audit",
-    # never-verified tail, prior-queue order
-    "session_concurrency_hourly",
-    "shuffled_shards",
-    "unigram_logprob_scores",
-    "bucketed_revenue_by_status",
-    "lineitem_stats_moments",
-    "lineitem_unpivot_metrics",
-    "salted_segment_revenue",
-    "seq_length_histogram",
-    "trailing_week_revenue",
-    "user_event_funnel",
-    "value_gini_by_event_type",
-    "embedding_cluster_sizes",
-    "cluster_aware_split",
-    "bpe_merges",
-    "bpe_token_counts",
-    "skipgram_pmi",
-    "data_quality_report",
-    "events_ohlc_hourly",
-    "streaming_quality_windows",
-    "weighted_sample_by_length",
-    "curriculum_batches",
-    "embedding_norms",
-    "label_centroid_spread",
-    "semantic_contamination",
-    "pii_redaction_stats",
-    "epoch_shuffled_batches",
-    "streaming_incremental_dedup",
-    "jsonl_roundtrip",
-    "orc_roundtrip",
-    "compaction_manifest",
-    "media_phash",
-    "table_profile",
-    "xml_roundtrip",
-    "snapshot_diff",
-    "supplier_basket_pairs",
-    # --- below the budget line: round-7 rotation (the remaining
-    # never-verified entries lead, in this order) ---------------------
-    "supplier_basket_rules",
-    "stupid_backoff_scores",
-    "bpe_fertility_by_lang",
-    "cluster_survivors",
-    "mixture_plan",
-    "user_retention_cohorts",
-    "events_value_outliers",
-    "trade_graph_degrees",
-    "embedding_dim_stats",
-    "ship_latency_percentiles",
-    "dau_wau",
-    "events_cusum_drift",
-    "streaming_trending_words",
-    "lang_confusion_matrix",
-    "char_entropy_scores",
-    "model_quality_scores",
-    "streaming_model_scores",
-    "streaming_synth_wordcount",
-    "ppjoin_dups",
-    "positional_index",
-    "vocab_growth",
-    "source_overlap_matrix",
-    "token_budget_selection",
-    "sorted_neighborhood_dups",
-    "events_seasonal_anomalies",
-    "keyword_pagerank",
-    "doc_novelty_scores",
-    "lang_source_pmi",
-    "containment_dups",
-    "split_leakage_audit",
-    "incremental_wordcount",
-    "event_type_transitions",
-    "transition_dwell_times",
-    "greedy_source_coverage",
-    "minhash_estimate_audit",
-    "ann_recall_audit",
-    "ann_recall_ladder",
-    "udtf_char_ngrams",
-    "lateral_order_stats",
-    "hof_array_sampler",
-    "supplier_graph_triangles",
-    # --- round-5 head (all green in CORRECTNESS_r05; rotate last) ----
-    # the one red row of CORRECTNESS_r04 (Decimal-vs-float64 pandas
-    # dtype mismatch; both sides now present DOUBLE) — re-verify
-    "events_rollup_cascade",
-    # implementations changed this round (global-rank windows removed
-    # per VERDICT items 5/6; winnowing POS_BASE fix per ADVICE;
-    # compression_ratios gains its tolerance-band oracle) — fresh rows
-    "bm25_scores",
-    "hybrid_rrf_retrieval",
-    "zipf_fit",
-    "winnowing_dups",
-    "compression_ratios",
-    "hll_set_intersection",
-    "ab_power_analysis",
-    # VERDICT item 4's named never-verified list: reference-parity ops
-    # O3/O5/O19 that have no driver row ever, the lakehouse family,
-    # the TPC-H gap set, and the headline dedup/graph/multimodal tail
-    "config_delimiters_wordcount",
-    "console_lines",
-    "rdd_wordcount",
-    "synthetic_corpus_wordcount",
-    "dedup_method_agreement",
-    "phrase_search",
-    "decimal_pricing_summary",
-    "manifest_sink_roundtrip",
-    "manifest_time_travel",
-    "streaming_manifest_ingest",
-    "semantic_dedup",
-    "trade_graph_pagerank",
-    "personalized_pagerank",
-    "media_phash_dups",
-    "q11_important_parts",
-    "q12_ship_priority",
-    "q16_supplier_counts",
-    # remaining never-verified entries, strongest-user-impact first
-    "contrastive_triplets",
-    "streaming_html_extract",
-    "ab_test_readout",
-    "vocab_drift_monitor",
-    "events_ewma_hourly",
-    "temperature_mixture_plan",
-    "quality_scorer_agreement",
-    "join_size_estimate",
-    "jsonl_schema_evolution",
-    "lineitem_correlations",
-    "ann_filtered",
-    "intradoc_line_dedup",
-    "source_funnel",
-    "streaming_unattributed_clicks",
-    "attribution_model_comparison",
-    "dynamic_gap_sessions",
-    "streaming_dynamic_sessions",
-    "zorder_skipping_audit",
-    "hilbert_skipping_audit",
-    "neyman_allocation_plan",
-    "consistent_hash_resharding",
-    "keep_rate_wilson_ci",
-    "bloom_fpr_audit",
-    "segment_dedup_summary",
-    "training_shard_manifest",
-    # --- below the budget line: round-6 rotation (never-verified) ----
-    # round-5 additions (hash-green at sf0.001/0.01/0.1 as they
-    # landed) lead the round-6 budget
-    "dsir_importance_weights",
-    "dsir_gumbel_sample",
-    "ccnet_perplexity_buckets",
-    "cdc_chunk_dups",
-    "margin_knn_alignment",
-    "model_calibration_bins",
-    "packing_efficiency_audit",
-    "customer_rfm_segments",
-    "order_price_deciles",
-    "session_concurrency_hourly",
-    "shuffled_shards",
-    "unigram_logprob_scores",
-    "bucketed_revenue_by_status",
-    "lineitem_stats_moments",
-    "lineitem_unpivot_metrics",
-    "salted_segment_revenue",
-    "seq_length_histogram",
-    "trailing_week_revenue",
-    "user_event_funnel",
-    "value_gini_by_event_type",
-    "embedding_cluster_sizes",
-    "cluster_aware_split",
-    "bpe_merges",
-    "bpe_token_counts",
-    "skipgram_pmi",
-    "data_quality_report",
-    "events_ohlc_hourly",
-    "streaming_quality_windows",
-    "weighted_sample_by_length",
-    "curriculum_batches",
-    "curriculum_layout_audit",
-    "embedding_norms",
-    "label_centroid_spread",
-    "semantic_contamination",
-    "pii_redaction_stats",
-    "epoch_shuffled_batches",
-    "streaming_incremental_dedup",
-    "jsonl_roundtrip",
-    "orc_roundtrip",
-    "compaction_manifest",
-    "media_phash",
-    "table_profile",
-    "xml_roundtrip",
-    "snapshot_diff",
-    "supplier_basket_pairs",
-    "supplier_basket_rules",
-    "stupid_backoff_scores",
-    "bpe_fertility_by_lang",
-    "cluster_survivors",
-    "mixture_plan",
-    "user_retention_cohorts",
-    "events_value_outliers",
-    "customer_rfm_segments",
-    "trade_graph_degrees",
-    "embedding_dim_stats",
-    "ship_latency_percentiles",
-    "dau_wau",
-    "events_cusum_drift",
-    "streaming_trending_words",
-    "lang_confusion_matrix",
-    "char_entropy_scores",
-    "model_quality_scores",
-    "streaming_model_scores",
-    "streaming_synth_wordcount",
-    "ppjoin_dups",
-    "positional_index",
-    "vocab_growth",
-    "source_overlap_matrix",
-    "token_budget_selection",
-    "sorted_neighborhood_dups",
-    "events_seasonal_anomalies",
-    "keyword_pagerank",
-    "doc_novelty_scores",
-    "lang_source_pmi",
-    "containment_dups",
-    "split_leakage_audit",
-    "incremental_wordcount",
-    "event_type_transitions",
-    "transition_dwell_times",
-    "greedy_source_coverage",
-    "minhash_estimate_audit",
-    "ann_recall_audit",
-    "ann_recall_ladder",
-    "udtf_char_ngrams",
-    "lateral_order_stats",
-    "hof_array_sampler",
-    "supplier_graph_triangles",
-    # --- round-4 head (all have fresh r4 rows; rotate last) ----------
-    # the two red rows of CORRECTNESS_r03 (events-ts bug, fixed):
-    "streaming_session_counts",
-    "streaming_stateful_totals",
-    # the events family whose r1/r2 greens the engine's TIMESTAMP_NTZ
-    # change invalidated (round-3 verdict item 2): fresh rows on the
-    # current engine outrank more never-verified entries, because this
-    # is the one class whose prior evidence was actually voided
-    "event_gaps",
-    "streaming_tumbling_counts",
-    "streaming_sliding_counts",
-    "streaming_enriched_counts",
-    "streaming_click_attribution",
-    "events_last_order_asof",
-    "user_session_counts",
-    "events_json_buckets",
-    # every remaining query with an oracle and NO driver row in any
-    # round (round 4 registered more never-verified queries than the
-    # budget holds; the overflow with the strongest indirect evidence
-    # is deferred below) — every registered query is additionally
-    # value-hash-green at sf0.1 (COVERAGE.md sweep)
-    "ann_ivfpq",
-    "ann_lsh_partitioned",
-    "ann_pq",
-    "benchmark_contamination",
-    "bloom_prefilter_stats",
-    "bm25_scores",
-    "cms_word_counts",
-    "corpus_mixture",
-    "csv_roundtrip",
-    "curation_funnel",
-    "dedup_clusters_twostar",
-    "duplicate_passages",
-    "passage_dup_spans",
-    "edit_distance_dups",
-    "events_hourly_gapfill",
-    "events_rollup_cascade",
-    "events_zorder_keys",
-    "incremental_exact_dedup",
-    "incremental_minhash_dups",
-    "overlapping_order_pairs",
-    "events_variant_stats",
-    "cogrouped_user_totals",
-    "partitioned_events_rollup",
-    # the three sketch queries upgraded from rows-only to full
-    # tolerance-band verification (exact values hash-compared, sketch
-    # asserted in-band) — never had a real driver comparison before
-    "approx_distinct_words",
-    "approx_value_quantiles",
-    "hll_sketch_rollup",
-    # the governance/web-extraction family added this round, all with
-    # full value-hash oracles on deterministically planted fixtures
-    "user_erasure_audit",
-    "html_boilerplate_strip",
-    "unicode_nfc_stats",
-    "url_domain_stats",
-    "blocklist_filter_stats",
-    # the degeneracy-family graph op added this round (unrolled-CTE
-    # oracle like the pagerank family)
-    "trade_graph_kcore",
-    "q20_excess_suppliers",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "quota_sample_per_source",
-    "repetition_scores",
-    "scd2_customer_upsert",
-    # --- below the budget line: round-5 rotation ---------------------
-    # the cross-method dedup agreement matrix composes three pipelines
-    # already driver-verified individually; its own row leads round 5
-    "dedup_method_agreement",
-    # the positional-index consumer (document-at-a-time phrase join)
-    "phrase_search",
-    # training-pair construction composing the verified dedup signal
-    "contrastive_triplets",
-    # streaming twin of the batch extraction (batch/stream parity)
-    "streaming_html_extract",
-    # deterministic-assignment experiment readout
-    "ab_test_readout",
-    # integer-exact snapshot drift audit
-    "vocab_drift_monitor",
-    # integer-exact EWMA burst monitor (the CUSUM complement)
-    "events_ewma_hourly",
-    # Python Data Source API, writer direction (two-phase commit)
-    "manifest_sink_roundtrip",
-    # exact-decimal money arithmetic (no defensive rounding anywhere)
-    "decimal_pricing_summary",
-    # T=2 multilingual sampling plan (sqrt weights, libm-safe)
-    "temperature_mixture_plan",
-    # heuristic-vs-model filter confusion (the ensemble audit)
-    "quality_scorer_agreement",
-    # cardinality-estimation identity audit (plan, don't pay)
-    "join_size_estimate",
-    # evolution-tolerant explicit-schema ingest over hive layout
-    "jsonl_schema_evolution",
-    # one-pass pairwise correlation matrix
-    "lineitem_correlations",
-    # predicate-as-join-key filtered vector search
-    "ann_filtered",
-    # C4-style line cleaning, within-document form
-    "intradoc_line_dedup",
-    # the per-source curation funnel (which feed loses docs where)
-    "source_funnel",
-    # stream-stream LEFT OUTER join (watermark-expiry null emission)
-    "streaming_unattributed_clicks",
-    # first-vs-last-touch credit comparison (batch attribution twin)
-    "attribution_model_comparison",
-    # native session_window with a per-event DYNAMIC gap column
-    "dynamic_gap_sessions",
-    # its streaming twin (state-store window merging under dyn gaps)
-    "streaming_dynamic_sessions",
-    # measured zone-map skipping: zorder vs linear layout
-    "zorder_skipping_audit",
-    # + the hilbert layout (unit-step curve, tighter file boxes)
-    "hilbert_skipping_audit",
-    # seeded-teleport PageRank (relevance-to-seeds, not centrality)
-    "personalized_pagerank",
-    # mergeable-sketch set algebra (inclusion-exclusion intersection)
-    "hll_set_intersection",
-    # snapshot isolation + AS-OF reads via retained manifests
-    "manifest_time_travel",
-    # exactly-once streaming ingest through the custom writer
-    "streaming_manifest_ingest",
-    # variance-optimal stratified budget allocation
-    "neyman_allocation_plan",
-    # minimal-movement resharding, measured vs mod-hash
-    "consistent_hash_resharding",
-    # uncertainty-aware gate report (Wilson score intervals)
-    "keep_rate_wilson_ci",
-    # measured vs textbook Bloom error budget
-    "bloom_fpr_audit",
-    # experiment sample-size planning (fixed-z power formula)
-    "ab_power_analysis",
-    "segment_dedup_summary",
-    # never-verified entries displaced by the governance family and
-    # the k-core query above (zero-sum 50-row budget): all are
-    # sweep-green at sf0.1 and lead the round-5 queue
-    "semantic_dedup",
-    "training_shard_manifest",
-    "session_concurrency_hourly",
-    "shuffled_shards",
-    "unigram_logprob_scores",
-    # demoted from the r4 budget to make room for the voided events
-    # family: single-table relational aggregates whose mechanics are
-    # identical to already-driver-green family members; sweep-green
-    # at sf0.1 on the current engine, first in line for round 5
-    "bucketed_revenue_by_status",
-    "lineitem_stats_moments",
-    "lineitem_unpivot_metrics",
-    "salted_segment_revenue",
-    "seq_length_histogram",
-    "trailing_week_revenue",
-    "user_event_funnel",
-    "value_gini_by_event_type",
-    # deferred never-green entries with the strongest indirect
-    # evidence: embedding_cluster_sizes shares ann_ivf's entire oracle
-    # CTE chain; synthetic_corpus_wordcount's connector is unit-tested
-    # for partitioning+determinism; the roundtrip wrappers re-drive the
-    # already-green wordcount
-    "embedding_cluster_sizes",
-    "synthetic_corpus_wordcount",
-    # cluster_aware_split composes minhash_lsh_dups + dedup_clusters,
-    # both themselves driver-verified; sweep-green at sf0.1
-    "cluster_aware_split",
-    # late round-4 additions (hash-green at sf0.001/0.01/0.1 locally;
-    # first in line for the round-5 budget)
-    "bpe_merges",
-    "bpe_token_counts",
-    "skipgram_pmi",
-    "data_quality_report",
-    "events_ohlc_hourly",
-    "streaming_quality_windows",
-    "weighted_sample_by_length",
-    "curriculum_batches",
-    "curriculum_layout_audit",
-    "embedding_norms",
-    "label_centroid_spread",
-    "semantic_contamination",
-    "pii_redaction_stats",
-    "epoch_shuffled_batches",
-    "streaming_incremental_dedup",
-    "console_lines",
-    "jsonl_roundtrip",
-    "orc_roundtrip",
-    "compaction_manifest",
-    "media_phash",
-    "media_phash_dups",
-    "table_profile",
-    "rdd_wordcount",
-    "xml_roundtrip",
-    "snapshot_diff",
-    "supplier_basket_pairs",
-    "supplier_basket_rules",
-    "stupid_backoff_scores",
-    "bpe_fertility_by_lang",
-    "cluster_survivors",
-    "mixture_plan",
-    "user_retention_cohorts",
-    "events_value_outliers",
-    "customer_rfm_segments",
-    "trade_graph_degrees",
-    "embedding_dim_stats",
-    "ship_latency_percentiles",
-    "dau_wau",
-    "events_cusum_drift",
-    "streaming_trending_words",
-    "lang_confusion_matrix",
-    "char_entropy_scores",
-    "trade_graph_pagerank",
-    "model_quality_scores",
-    "streaming_model_scores",
-    "config_delimiters_wordcount",
-    "streaming_synth_wordcount",
-    # round-4 CONTINUATION additions (each hash-verified at
-    # sf0.001/0.01/0.1 as it landed; 193-query state fully swept at
-    # sf0.1, sf0.01, and partitions=7 — COVERAGE.md): never
-    # driver-verified, so they belong in the round-5 budget head
-    # alongside the other never-green entries above
-    "ppjoin_dups",
-    "positional_index",
-    "vocab_growth",
-    "zipf_fit",
-    "source_overlap_matrix",
-    "token_budget_selection",
-    "sorted_neighborhood_dups",
-    "events_seasonal_anomalies",
-    "winnowing_dups",
-    "hybrid_rrf_retrieval",
-    "keyword_pagerank",
-    "doc_novelty_scores",
-    "lang_source_pmi",
-    "containment_dups",
-    "split_leakage_audit",
-    "incremental_wordcount",
-    "event_type_transitions",
-    "transition_dwell_times",
-    "greedy_source_coverage",
-    "minhash_estimate_audit",
-    "ann_recall_audit",
-    "ann_recall_ladder",
-    "udtf_char_ngrams",
-    "lateral_order_stats",
-    "hof_array_sampler",
-    "supplier_graph_triangles",
-    # demoted from the r4 budget to fund the sketch upgrades above:
-    # TPC-H gap queries whose mechanics mirror already-driver-green
-    # family members (q12≈q4 join-agg, q11≈q15 HAVING-over-groups,
-    # q16≈q13 distinct counts); sweep-green at sf0.1, head of round 5
-    "q11_important_parts",
-    "q12_ship_priority",
-    "q16_supplier_counts",
-    # the one remaining no-oracle rows-only entry (zlib has no DuckDB
-    # equivalent; thresholds unit-tested on synthetic text)
-    "compression_ratios",
-    # older greens worth an eventual refresh: streaming_wordcount's
-    # r1/r2 row predates the streaming-source rework (documents table,
-    # not affected by the events-ts change); running_revenue got its
-    # sf0.1 tie-break fix after its last driver row
-    "streaming_wordcount",
-    "running_revenue_per_supplier",
-    # everything else, oldest evidence first is immaterial here
-    "ann_bruteforce",
-    "ann_ivf",
-    "ann_lsh",
-    "ann_lsh_multiprobe",
-    "bigram_counts",
-    "bigram_pmi",
-    "brand_revenue",
-    "churned_customers_9596",
-    "clean_corpus_summary",
-    "customer_order_counts_outer",
-    "customer_order_zscores",
-    "customers_with_urgent_orders",
-    "customers_without_orders",
-    "dedup_clusters",
-    "doc_chunks",
-    "doc_fingerprints",
-    "embedding_dups",
-    "exact_dedup",
-    "grouping_sets_revenue",
-    "hash_sample_documents",
-    "lang_id",
-    "lineitem_cube",
-    "lineitem_part_price_band",
-    "media_features",
-    "media_frames",
-    "minhash_lsh_dups",
-    "ngram_jaccard_dups",
-    "order_price_deciles",
-    "order_price_percentiles",
-    "orders_by_month",
-    "orders_rollup",
-    "orders_status_pivot",
-    "packed_sequences",
-    "priority_status_sets",
-    "q10_returned_items",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q15_top_suppliers",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_bracket_revenue",
-    "q1_pricing_summary",
-    "q22_dormant_rich_customers",
-    "q3_top_revenue_orders",
-    "q4_late_order_priority",
-    "q5_regional_revenue",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q8_market_share",
-    "quality_scores",
-    "repeat_customers_9596",
-    "salted_wordcount",
-    "scalar_function_sampler",
-    "scrubbed_docs",
-    "simhash_banded_dups",
-    "simhash_dups",
-    "simhash_fingerprints",
-    "sql_wordcount",
-    "streaming_dedup",
-    "tfidf_top_terms",
-    "token_stats",
-    "top3_orders_per_customer",
-    "word_doc_frequency",
-    "wordcount_compat",
-    "wordcount_per_doc",
-    "wordcount_topk",
-]
-
 
 def _load_all() -> None:
-    """Import every query module so its @register calls run, then
-    apply the driver-verification priority order."""
+    """Import every query module so its @register calls run."""
     global _LOADED
     if _LOADED:
         return
@@ -1001,9 +86,4 @@ def _load_all() -> None:
         validation_queries,
         wordcount_queries,
     )
-
-    ordered = {n: _REGISTRY[n] for n in _PRIORITY if n in _REGISTRY}
-    ordered.update((n, v) for n, v in _REGISTRY.items() if n not in ordered)
-    _REGISTRY.clear()
-    _REGISTRY.update(ordered)
     _LOADED = True

@@ -34,8 +34,9 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize the events `ts` column to a plain UTC TIMESTAMP.
 
-    events.ts is parquet TIMESTAMP(NANOS). Depending on the Spark
-    version/confs in play it surfaces as one of:
+    events.ts is parquet TIMESTAMP(MICROS) with isAdjustedToUTC=false
+    (arrow timestamp[us]), which Spark 4.1 reads as TIMESTAMP_NTZ.
+    Depending on the Spark version/confs in play it surfaces as one of:
       - bigint        (legacy nanosAsLong readers): int64 nanos —
         truncate with integer div (the float path rounds at this
         magnitude), then timestamp_micros;
@@ -90,9 +91,3 @@ def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataF
     if name == "events":
         df = normalize_events_ts(df)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every fixture table as a temp view for spark.sql()."""
-    for name in TABLES:
-        table(spark, name, sf_dir).createOrReplaceTempView(name)

@@ -255,3 +255,30 @@ def test_label_propagation_separates_components_deterministically(spark):
     star = undirected([(0, 2), (0, 4), (0, 6)])
     got = {r["node"]: r["label"] for r in label_propagation(star, rounds=1).collect()}
     assert got == {0: 0, 2: 0, 4: 0, 6: 0}
+
+
+def test_label_propagation_ignores_input_self_loops(spark):
+    """An input self-loop (v, v) must not count v's own label twice:
+    the same edge set with and without self-loops on some of its
+    nodes gives the same labels, round by round."""
+    from mpi_word_count_spark.operators.graph import label_propagation
+
+    def undirected(pairs, loops=()):
+        rows = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
+        rows += [(v, v) for v in loops]
+        return spark.createDataFrame(rows, "src long, dst long")
+
+    def labels(df, rounds):
+        return {
+            r["node"]: r["label"]
+            for r in label_propagation(df, rounds=rounds).collect()
+        }
+
+    star = [(0, 2), (0, 4), (0, 6)]
+    assert labels(undirected(star, loops=[2, 4]), 1) == labels(undirected(star), 1)
+    # two triangles joined by a bridge, plus a pendant path
+    graph = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (6, 7), (7, 8)]
+    for rounds in (1, 2, 4):
+        assert labels(undirected(graph, loops=[3, 5, 7, 8]), rounds) == labels(
+            undirected(graph), rounds
+        )

@@ -118,3 +118,46 @@ def test_edit_distance_length_band_is_lossless(spark):
     # the band AND (by the Levenshtein lower bound) absent from brute
     # force
     assert (1, 4) not in got
+
+
+def test_rrf_index_path_matches_oracle(spark):
+    """hybrid_rrf_retrieval's materialized-index plan only runs on
+    documents inputs of RRF_INDEX_MIN_BYTES and up, which no fixture
+    reaches; run it directly against the same DuckDB oracle the
+    inline plan is checked with."""
+    from mpi_word_count_spark.operators import release_caches
+    from mpi_word_count_spark.oracle import compare
+    from mpi_word_count_spark.queries.text_queries import _hybrid_rrf, _rrf_oracle
+    from mpi_word_count_spark.tables import DEFAULT_SF_DIR
+
+    try:
+        ok, msg = compare(
+            spark,
+            lambda s, d: _hybrid_rrf(s, d, use_index=True),
+            _rrf_oracle(),
+            DEFAULT_SF_DIR,
+        )
+    finally:
+        release_caches()
+    assert ok, msg
+
+
+def test_rrf_use_index_measures_through_hadoop_fs(spark, monkeypatch):
+    """The switch sizes documents.parquet through the path's Hadoop
+    FileSystem, so a scheme-qualified sf_dir measures its real size
+    instead of 0."""
+    import os
+
+    from mpi_word_count_spark.queries import text_queries
+    from mpi_word_count_spark.tables import DEFAULT_SF_DIR
+
+    # the largest fixture scale, still below the threshold
+    sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.1")
+    size = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
+    assert size < text_queries.RRF_INDEX_MIN_BYTES
+    assert not text_queries._rrf_use_index(spark, sf_dir)
+    monkeypatch.setattr(text_queries, "RRF_INDEX_MIN_BYTES", size)
+    assert text_queries._rrf_use_index(spark, sf_dir)
+    assert text_queries._rrf_use_index(spark, "file://" + sf_dir)
+    monkeypatch.setattr(text_queries, "RRF_INDEX_MIN_BYTES", size + 1)
+    assert not text_queries._rrf_use_index(spark, "file://" + sf_dir)
