@@ -1,17 +1,31 @@
 """Deduplication operators for LLM-training-data pipelines.
 
-Five flavors (BASELINE.json north star), all designed shuffle-lean:
+Flavors, all designed shuffle-lean:
 
   exact_dedup          hash-groupBy on md5(text) — one shuffle on a
                        16-byte key regardless of document size
   ngram_jaccard_pairs  exact near-dup via inverted shingle index —
                        the join fans out only on SHARED shingles
+  ppjoin_pairs         exact set-similarity join, prefix + positional
+                       filtered (PPJoin)
   minhash_lsh_pairs    MinHash signatures + banded LSH — candidate
                        generation cost is O(docs · bands), verification
                        only on bucket collisions (the 100 TB path)
-  simhash              64-bit-style (60-bit) SimHash fingerprints +
-                       hamming-distance pairing
-  embedding_dup_pairs  cosine near-dup over embedding vectors
+  simhash_dup_pairs    60-bit SimHash fingerprints + hamming pairing;
+  simhash_banded_pairs the pigeonhole-banded twin (exact, equi-join)
+  embedding_dup_pairs  cosine near-dup over embedding vectors, all
+                       pairs; embedding_dup_pairs_banded is the
+                       hyperplane-LSH plan
+  incremental_*        batch-vs-corpus classification (exact, MinHash,
+                       embedding) against persisted corpus stores
+
+The banded candidate-pair pipelines (minhash_lsh_pairs,
+simhash_banded_pairs, embedding_dup_pairs_banded, the incremental
+MinHash and embedding operators, multimodal.phash_dups and the MinHash
+estimate audit) take their pairs from ONE place: blocked_pairs
+(distinct id pairs of a block-key self-join) or, when every pair must
+contain a batch row, batch_blocked_pairs. A blocking-join fix lands
+there once.
 
 Every hash is md5-derived (functions/hashing.py) so the DuckDB oracle
 reproduces the exact same candidate sets and signatures — the
@@ -24,6 +38,9 @@ to bound fan-out — exposed via `max_shingle_freq`.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -280,14 +297,12 @@ def _verify_candidates_jaccard(
     candidates: DataFrame,
     sizes: DataFrame,
     threshold: float,
-    n: int,
-    id_col: str,
-    text_col: str,
     left: str = "d1",
     right: str = "d2",
     extra: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Exact-Jaccard verification of an LSH candidate-pair frame:
+    """Exact-Jaccard verification of an LSH candidate-pair frame over
+    a (doc_id, text) table, 3-word shingles:
     re-tokenize ONLY candidate docs (broadcast semi join on the
     candidate ids — LSH keeps candidates sparse by design, so the
     full-corpus tokenizations a naive plan pays become |candidates|
@@ -298,8 +313,8 @@ def _verify_candidates_jaccard(
     CONTRACT (ADVICE r10): `candidates` must be DISTINCT per
     (left, right, *extra) — this emits one output row per candidate
     row (the pre-r10 groupBy form collapsed duplicates; the
-    array_intersect form does not). Both callers .distinct() their
-    candidate frames before calling.
+    array_intersect form does not). Both callers take their candidates
+    from blocked_pairs / batch_blocked_pairs, which guarantee it.
 
     Scale trade-off (ADVICE r10): each candidate pair carries both
     documents' FULL distinct-shingle arrays through the two joins —
@@ -311,14 +326,14 @@ def _verify_candidates_jaccard(
     from mpi_word_count_spark.operators import widen
 
     cand_ids = (
-        candidates.select(F.col(left).alias(id_col))
-        .union(candidates.select(F.col(right).alias(id_col)))
+        candidates.select(F.col(left).alias("doc_id"))
+        .union(candidates.select(F.col(right).alias("doc_id")))
         .distinct()
     )
     # probe=df: the semi join preserves df's partitioning, and letting
     # widen() plan the candidates subtree cost ~2s of driver time per
     # plan build (the dedup_clusters drift, VERDICT r8 item 2)
-    pruned = df.join(F.broadcast(cand_ids), id_col, "left_semi")
+    pruned = df.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     # Optimization r10 (guide §2.3, OPTIMIZATION_r10.md): intersection
     # counts come from size(array_intersect(set1, set2)) over per-doc
     # DISTINCT shingle ARRAYS (a narrow projection — no explode), not
@@ -330,12 +345,8 @@ def _verify_candidates_jaccard(
     # by the inner join before — both forms kill them at the threshold
     # filter. Stage-profiled at sf0.1: the verification tail fell from
     # 2.2-3.1 s to ~0.9 s of the minhash pipeline.
-    toks = widen(pruned, probe=df).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
-    )
-    sets = toks.select(
-        "doc_id", shingles_from_tokens(F.col("_toks"), n).alias("_set")
-    )
+    toks = widen(pruned, probe=df).select("doc_id", tokens_col("text").alias("_toks"))
+    sets = toks.select("doc_id", shingles_from_tokens(F.col("_toks")).alias("_set"))
     sa_, sb_ = sets.alias("sa"), sets.alias("sb")
     inter = (
         candidates.join(sa_, F.col(left) == F.col("sa.doc_id"))
@@ -453,19 +464,126 @@ def band_keys(
     ).select("doc_id", "bk.band", "bk.key")
 
 
+def _same_block(x: str, y: str, block_cols: tuple[str, ...]) -> Column:
+    """Equality of every block column between aliases x and y."""
+    return reduce(and_, [F.col(f"{x}.{c}") == F.col(f"{y}.{c}") for c in block_cols])
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+
+def blocked_pairs(
+    keys: DataFrame,
+    id_col: str,
+    block_cols: tuple[str, ...],
+    names: tuple[str, str] = ("d1", "d2"),
+    pair_filter=None,
 ) -> DataFrame:
-    """MinHash + banded LSH near-duplicate pairs, verified with exact
-    Jaccard ≥ threshold. Deterministic end to end (md5-derived hash
-    family) — the oracle replicates the identical pipeline.
+    """Distinct (names[0] < names[1]) id pairs that share at least one
+    block — the equi-self-join of `keys` on `block_cols`, the candidate
+    generator of every banded pipeline (MinHash LSH bands, pigeonhole
+    SimHash and dHash chunks, hyperplane buckets). A pair colliding in
+    several blocks comes out once: verification downstream may rely on
+    distinct candidates (_verify_candidates_jaccard's contract).
+
+    `pair_filter(a, b) -> Column` (optional) is AND-ed into the join
+    condition over the two aliased sides, as in _shared_shingle_pairs.
+    It must read per-id columns only, so a pair is kept or dropped
+    whole whatever block it met in. Caching stays with the caller."""
+    a, b = keys.alias("a"), keys.alias("b")
+    cond = _same_block("a", "b", block_cols) & (
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    )
+    if pair_filter is not None:
+        cond = cond & pair_filter(a, b)
+    return (
+        a.join(b, cond)
+        .select(
+            F.col(f"a.{id_col}").alias(names[0]), F.col(f"b.{id_col}").alias(names[1])
+        )
+        .distinct()
+    )
+
+
+def batch_blocked_pairs(
+    batch_keys: DataFrame,
+    store_keys: DataFrame,
+    id_col: str,
+    block_cols: tuple[str, ...],
+) -> DataFrame:
+    """Distinct (did, other, other_is_batch) block-sharing pairs where
+    `did` is a batch id — the incremental form of blocked_pairs. The
+    batch keys broadcast against the store keys (other = a store id),
+    and a broadcast self-join of the batch keys adds the in-batch pairs,
+    owned by the larger id (other < did). Every pair contains a batch
+    row, so fan-out is O(batch · blocks), and the store is never
+    self-joined or shuffled; the batch is one ingest tick, small by
+    nature, which the broadcasts rely on.
+
+    `store_keys` must hold no batch id. The pairs are then exactly
+    blocked_pairs over batch ∪ store, restricted to pairs containing a
+    batch id. Caching stays with the caller."""
+    bb = batch_keys.alias("bb")
+    vs_store = (
+        store_keys.alias("o")
+        .join(F.broadcast(bb), _same_block("bb", "o", block_cols))
+        .select(
+            F.col(f"bb.{id_col}").alias("did"),
+            F.col(f"o.{id_col}").alias("other"),
+            F.lit(False).alias("other_is_batch"),
+        )
+    )
+    in_batch = bb.join(
+        F.broadcast(batch_keys.alias("o2")),
+        _same_block("bb", "o2", block_cols)
+        & (F.col(f"o2.{id_col}") < F.col(f"bb.{id_col}")),
+    ).select(
+        F.col(f"bb.{id_col}").alias("did"),
+        F.col(f"o2.{id_col}").alias("other"),
+        F.lit(True).alias("other_is_batch"),
+    )
+    return vs_store.unionByName(in_batch).distinct()
+
+
+def _batch_status(flags: DataFrame, passed: DataFrame, *extra: Column) -> DataFrame:
+    """Per-batch-row classification from verified (did, other,
+    other_is_batch) matches — the shared tail of the incremental
+    operators. `flags` is (id, is_batch) over every row; `extra` are
+    further aggregates over `passed`, carried to the output. Status is
+    dup_of_corpus / dup_in_batch / unique with corpus matches first;
+    dup_of is the smallest id of the winning class and n_matches counts
+    every verified match."""
+    id_col = flags.columns[0]
+    agg = passed.groupBy("did").agg(
+        F.min(F.when(~F.col("other_is_batch"), F.col("other"))).alias("c_min"),
+        F.min(F.when(F.col("other_is_batch"), F.col("other"))).alias("b_min"),
+        F.count(F.lit(1)).cast("bigint").alias("n_matches"),
+        *extra,
+    )
+    status = (
+        F.when(F.col("c_min").isNotNull(), F.lit("dup_of_corpus"))
+        .when(F.col("b_min").isNotNull(), F.lit("dup_in_batch"))
+        .otherwise(F.lit("unique"))
+    )
+    return (
+        flags.filter(F.col("is_batch"))
+        # agg is batch-sized: broadcast so the closing left join (and
+        # with it the whole tail) never shuffles
+        .join(F.broadcast(agg), F.col(id_col) == F.col("did"), "left")
+        .select(
+            id_col,
+            F.coalesce(F.col("c_min"), F.col("b_min")).alias("dup_of"),
+            status.alias("status"),
+            F.coalesce(F.col("n_matches"), F.lit(0).cast("bigint")).alias(
+                "n_matches"
+            ),
+            *agg.columns[4:],  # the `extra` aggregates
+        )
+    )
+
+
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """MinHash + banded LSH near-duplicate pairs over a (doc_id, text)
+    table, verified with exact Jaccard ≥ threshold. Deterministic end
+    to end (md5-derived hash family) — the oracle replicates the
+    identical pipeline.
 
     Plan shape: signatures (1 shuffle) → band keys (narrow) →
     self-join on (band, key) (1 shuffle on 16-byte md5 band keys) →
@@ -484,34 +602,16 @@ def minhash_lsh_pairs(
     """
     from mpi_word_count_spark.operators import track_cache
 
-    sig = track_cache(minhash_signatures(df, num_hashes, n, id_col, text_col))
-    bands = band_keys(sig, num_hashes, num_bands)
-    a = bands.alias("a")
-    b_ = bands.alias("b")
+    sig = track_cache(minhash_signatures(df))
     # cached: consumed twice (candidate-id broadcast + verification
     # join) and tiny by LSH design — one bands self-join instead of two
-    candidates = track_cache(
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
+    candidates = track_cache(blocked_pairs(band_keys(sig), "doc_id", ("band", "key")))
     # Verification re-tokenizes ONLY candidate docs (the semi join in
     # the shared helper); the signature/banding subtree is recomputed
     # for the id list, but it shuffles ~17 longs/doc — orders cheaper
     # than tokenizing text.
     return _verify_candidates_jaccard(
-        df,
-        candidates,
-        sig.select("doc_id", "n_shingles"),
-        threshold,
-        n,
-        id_col,
-        text_col,
+        df, candidates, sig.select("doc_id", "n_shingles"), threshold
     )
 
 
@@ -745,6 +845,11 @@ def simhash(
     )
 
 
+def _hamming(x: str, y: str) -> Column:
+    """Hamming distance between the `simhash` columns of aliases x, y."""
+    return F.bit_count(F.col(f"{x}.simhash").bitwiseXOR(F.col(f"{y}.simhash")))
+
+
 def simhash_dup_pairs(
     df: DataFrame,
     max_hamming: int = 8,
@@ -761,15 +866,12 @@ def simhash_dup_pairs(
     s = simhash(df, id_col, text_col)
     a = s.alias("a")
     b = s.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
     return (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("d1"),
             F.col("b.doc_id").alias("d2"),
-            ham.cast("bigint").alias("hamming"),
+            _hamming("a", "b").cast("bigint").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -786,24 +888,20 @@ def simhash_chunk_bounds(
     return [(bounds[j], bounds[j + 1] - bounds[j]) for j in range(chunks)]
 
 
-def simhash_banded_pairs(
-    df: DataFrame,
-    max_hamming: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming ≤ max_hamming — the SCALE
-    path: equi-join on fingerprint chunks instead of the all-pairs
-    comparison. Produces IDENTICAL output to simhash_dup_pairs (the
-    pigeonhole guarantee is exact, not probabilistic), but candidate
-    generation is a hash join on (chunk_no, chunk_value) whose cost
-    tracks collision structure, not |docs|² — the same banding idea
-    as MinHash LSH, with zero recall loss.
+def simhash_banded_pairs(df: DataFrame, max_hamming: int = 8) -> DataFrame:
+    """Near-dup pairs by SimHash hamming ≤ max_hamming over a
+    (doc_id, text) table — the SCALE path: equi-join on fingerprint
+    chunks instead of the all-pairs comparison. Produces IDENTICAL
+    output to simhash_dup_pairs (the pigeonhole guarantee is exact,
+    not probabilistic), but candidate generation is a hash join on
+    (chunk_no, chunk_value) whose cost tracks collision structure, not
+    |docs|² — the same banding idea as MinHash LSH, with zero recall
+    loss. The hamming test rides in the join; `hamming` is re-attached
+    from the cached fingerprints for the surviving pairs only.
     """
     from mpi_word_count_spark.operators import track_cache
 
-    s = track_cache(simhash(df, id_col, text_col, bits))
+    s = track_cache(simhash(df))
     chunks = [
         F.struct(
             F.lit(j).alias("band"),
@@ -811,28 +909,24 @@ def simhash_banded_pairs(
                 "chunk"
             ),
         )
-        for j, (shift, width) in enumerate(simhash_chunk_bounds(bits, max_hamming))
+        for j, (shift, width) in enumerate(
+            simhash_chunk_bounds(SIMHASH_BITS, max_hamming)
+        )
     ]
     bands = s.select(
         "doc_id", "simhash", F.explode(F.array(*chunks)).alias("bk")
     ).select("doc_id", "simhash", "bk.band", "bk.chunk")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    pairs = blocked_pairs(
+        bands,
+        "doc_id",
+        ("band", "chunk"),
+        pair_filter=lambda a, b: _hamming("a", "b") <= max_hamming,
+    )
+    sa, sb = s.alias("sa"), s.alias("sb")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            ham.cast("bigint").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+        pairs.join(sa, F.col("d1") == F.col("sa.doc_id"))
+        .join(sb, F.col("d2") == F.col("sb.doc_id"))
+        .select("d1", "d2", _hamming("sa", "sb").cast("bigint").alias("hamming"))
     )
 
 
@@ -989,20 +1083,15 @@ def embedding_contamination(
 
 
 def embedding_dup_pairs_banded(
-    df: DataFrame,
-    threshold: float = 0.4,
-    num_bands: int = NUM_EMB_BANDS,
-    planes_per_band: int = EMB_PLANES_PER_BAND,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    df: DataFrame, threshold: float = 0.4, dim: int | None = None
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id1 < id2, cos ≥ τ) with
-    banded random-hyperplane LSH candidate generation — the 100 TB
-    plan. Same shape as MinHash LSH: per band, bucket = the sign bits
-    of that band's hyperplanes; candidates are same-(band, bucket)
-    pairs (hash equi-join, never a theta join over the corpus); exact
-    cosine verification runs only on the distinct candidate id pairs.
+    """Embedding-cosine near-duplicate pairs (id1 < id2, cos ≥ τ) over
+    a (vec_id, embedding) table with banded random-hyperplane LSH
+    candidate generation — the 100 TB plan. Same shape as MinHash LSH:
+    per band, bucket = the sign bits of that band's hyperplanes;
+    candidates are same-(band, bucket) pairs (hash equi-join, never a
+    theta join over the corpus); exact cosine verification runs only
+    on the distinct candidate id pairs.
 
     Recall < 1 by construction (cross-bucket pairs in every band are
     missed) — the documented trade every embedding-dedup system at
@@ -1012,23 +1101,13 @@ def embedding_dup_pairs_banded(
     """
     from mpi_word_count_spark.functions.vector import dot, norm
 
-    bands = embedding_band_keys(df, num_bands, planes_per_band, id_col, vec_col, dim)
-    a = bands.alias("a")
-    b_ = bands.alias("b")
-    candidates = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id1"), F.col("b._id").alias("id2"))
-        .distinct()
+    candidates = blocked_pairs(
+        embedding_band_keys(df, dim=dim), "_id", ("band", "bucket"), ("id1", "id2")
     )
     v = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        norm(F.col(vec_col)).alias("_norm"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_vec"),
+        norm(F.col("embedding")).alias("_norm"),
     )
     va = v.alias("va")
     vb = v.alias("vb")
@@ -1052,17 +1131,13 @@ def incremental_embedding_dups(
     emb: DataFrame,
     batch_filter: Column,
     threshold: float = 0.4,
-    num_bands: int = NUM_EMB_BANDS,
-    planes_per_band: int = EMB_PLANES_PER_BAND,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
     corpus_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental SEMANTIC near-duplicate classification of a new
-    vector batch against an existing embedding corpus — the embedding
-    twin of incremental_minhash_dups (and the continuous-ingest piece
-    of the ANN family). Returns one row per BATCH vector: (vec_id,
+    vector batch against an existing (vec_id, embedding) corpus — the
+    embedding twin of incremental_minhash_dups (and the continuous-ingest
+    piece of the ANN family). Returns one row per BATCH vector: (vec_id,
     dup_of, status, n_matches, max_cosine) with status ∈
     {dup_of_corpus, dup_in_batch, unique}; corpus matches take
     precedence, dup_of is the smallest qualifying id of the winning
@@ -1071,22 +1146,19 @@ def incremental_embedding_dups(
 
     The incremental point: when `corpus_buckets` is supplied (a
     persisted hyperplane-LSH bucket store — num_bands longs/vector
-    written once per corpus version, (_id, band, bucket)), ONLY the
-    batch is banded; the corpus contributes nothing but its stored
-    band keys to the candidate join, and corpus vectors are scanned
-    only to verify the (few) candidates. At 100 TB that is the
-    difference between re-banding the corpus per snapshot and reading
-    kilobytes per incoming vector.
+    written once per corpus version, (_id, band, bucket), batch
+    vectors excluded), ONLY the batch is banded; the corpus contributes
+    nothing but its stored band keys to the candidate join, and corpus
+    vectors are scanned only to verify the (few) candidates. At 100 TB
+    that is the difference between re-banding the corpus per snapshot
+    and reading kilobytes per incoming vector.
 
     Plan shape (the batch is small by nature — one ingest tick):
-      1. batch band keys (scan-local) broadcast against the corpus
-         bucket store → candidate (batch, corpus) id pairs; every
-         candidate contains a batch vector, so fan-out is
+      1. batch_blocked_pairs: batch band keys (scan-local, cached)
+         broadcast against the corpus bucket store, plus the broadcast
+         batch self-join → candidate (batch, other) id pairs, fan-out
          O(batch · bands), never O(corpus · bands);
-      2. batch-vs-batch candidates from the broadcast self-join of
-         the batch band keys (larger id owns the pair, like the
-         MinHash twin);
-      3. ONE corpus scan ⋈ broadcast(candidates) ⋈ broadcast(batch
+      2. ONE corpus scan ⋈ broadcast(candidates) ⋈ broadcast(batch
          vectors) → exact cosine on candidate rows only.
     The corpus is never self-joined and its vectors are never
     shuffled. Deterministic md5-derived planes, so the DuckDB oracle
@@ -1110,11 +1182,7 @@ def incremental_embedding_dups(
     if corpus_buckets is None:
         all_bands = embedding_band_keys(
             emb.withColumn("_is_batch", batch_filter),
-            num_bands,
-            planes_per_band,
-            id_col,
-            vec_col,
-            dim,
+            dim=dim,
             extra_cols=("_is_batch",),
         )
         batch_bands = all_bands.filter(F.col("_is_batch")).select(
@@ -1124,53 +1192,20 @@ def incremental_embedding_dups(
             "_id", "band", "bucket"
         )
     else:
-        batch_bands = embedding_band_keys(
-            emb.filter(batch_filter),
-            num_bands,
-            planes_per_band,
-            id_col,
-            vec_col,
-            dim,
-        )
+        batch_bands = embedding_band_keys(emb.filter(batch_filter), dim=dim)
         corpus_bands = corpus_buckets.select("_id", "band", "bucket")
-    batch_bands = track_cache(batch_bands)
-    bb = batch_bands.alias("bb")
-    corpus_cands = (
-        corpus_bands.alias("o")
-        .join(
-            F.broadcast(bb),
-            (F.col("bb.band") == F.col("o.band"))
-            & (F.col("bb.bucket") == F.col("o.bucket")),
-        )
-        .select(
-            F.col("bb._id").alias("did"),
-            F.col("o._id").alias("other"),
-            F.lit(False).alias("other_is_batch"),
-        )
+    candidates = batch_blocked_pairs(
+        track_cache(batch_bands), corpus_bands, "_id", ("band", "bucket")
     )
-    batch_cands = (
-        bb.join(
-            F.broadcast(batch_bands.alias("o2")),
-            (F.col("bb.band") == F.col("o2.band"))
-            & (F.col("bb.bucket") == F.col("o2.bucket"))
-            & (F.col("o2._id") < F.col("bb._id")),
-        )
-        .select(
-            F.col("bb._id").alias("did"),
-            F.col("o2._id").alias("other"),
-            F.lit(True).alias("other_is_batch"),
-        )
-    )
-    candidates = corpus_cands.unionByName(batch_cands).distinct()
     batch_vecs = emb.filter(batch_filter).select(
-        F.col(id_col).alias("did"),
-        F.col(vec_col).alias("_bvec"),
-        norm(F.col(vec_col)).alias("_bnorm"),
+        F.col("vec_id").alias("did"),
+        F.col("embedding").alias("_bvec"),
+        norm(F.col("embedding")).alias("_bnorm"),
     )
     other_vecs = emb.select(
-        F.col(id_col).alias("other"),
-        F.col(vec_col).alias("_ovec"),
-        norm(F.col(vec_col)).alias("_onorm"),
+        F.col("vec_id").alias("other"),
+        F.col("embedding").alias("_ovec"),
+        norm(F.col("embedding")).alias("_onorm"),
     )
     passed = (
         other_vecs.join(F.broadcast(candidates), "other")
@@ -1187,33 +1222,8 @@ def incremental_embedding_dups(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    agg = passed.groupBy("did").agg(
-        F.min(F.when(~F.col("other_is_batch"), F.col("other"))).alias("c_min"),
-        F.min(F.when(F.col("other_is_batch"), F.col("other"))).alias("b_min"),
-        F.count(F.lit(1)).cast("bigint").alias("n_matches"),
-        F.max("cosine").alias("max_cosine"),
-    )
-    status = (
-        F.when(F.col("c_min").isNotNull(), F.lit("dup_of_corpus"))
-        .when(F.col("b_min").isNotNull(), F.lit("dup_in_batch"))
-        .otherwise(F.lit("unique"))
-    )
-    flags = emb.select(F.col(id_col).alias("vec_id"), batch_filter.alias("is_batch"))
-    return (
-        flags.filter(F.col("is_batch"))
-        # agg is batch-sized: broadcast so the closing left join (and
-        # with it the whole plan) never shuffles
-        .join(F.broadcast(agg), flags.vec_id == agg.did, "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("c_min"), F.col("b_min")).alias("dup_of"),
-            status.alias("status"),
-            F.coalesce(F.col("n_matches"), F.lit(0).cast("bigint")).alias(
-                "n_matches"
-            ),
-            F.col("max_cosine"),
-        )
-    )
+    flags = emb.select("vec_id", batch_filter.alias("is_batch"))
+    return _batch_status(flags, passed, F.max("cosine").alias("max_cosine"))
 
 
 def embedding_dup_pairs(
@@ -1482,30 +1492,27 @@ def incremental_minhash_dups(
     df: DataFrame,
     batch_filter: Column,
     threshold: float = 0.5,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     corpus_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-duplicate classification of a new batch against
-    an existing corpus — the LSH companion of incremental_exact_dedup.
-    Returns one row per BATCH doc: (doc_id, dup_of, status, n_matches)
-    with status ∈ {dup_of_corpus, dup_in_batch, unique}; corpus
-    matches take precedence, dup_of is the smallest qualifying id of
-    the winning class, and matches are verified with exact Jaccard ≥
-    threshold (never bucket-collision alone).
+    an existing (doc_id, text) corpus — the LSH companion of
+    incremental_exact_dedup. Returns one row per BATCH doc: (doc_id,
+    dup_of, status, n_matches) with status ∈ {dup_of_corpus,
+    dup_in_batch, unique}; corpus matches take precedence, dup_of is
+    the smallest qualifying id of the winning class, and matches are
+    verified with exact Jaccard ≥ threshold (never bucket-collision
+    alone).
 
     The incremental point: when `corpus_signatures` is supplied (a
     persisted signature store — 17 longs/doc written once per corpus
-    version), ONLY the batch is tokenized and signed; the corpus
-    contributes nothing but its stored signatures to the band join,
-    and corpus text is touched only to verify the (few) candidate
-    pairs. At 100 TB that is the difference between re-reading the
-    corpus per snapshot and reading kilobytes per incoming doc. The
-    band join itself is batch-driven: every candidate contains a batch
-    doc, so fan-out is O(batch · bands), not O(corpus · bands).
+    version, batch docs excluded), ONLY the batch is tokenized and
+    signed; the corpus contributes nothing but its stored signatures
+    to the band join, and corpus text is touched only to verify the
+    (few) candidate pairs. At 100 TB that is the difference between
+    re-reading the corpus per snapshot and reading kilobytes per
+    incoming doc. The band join itself is batch-driven
+    (batch_blocked_pairs): every candidate contains a batch doc, so
+    fan-out is O(batch · bands), not O(corpus · bands).
 
     Without `corpus_signatures` both sides are signed in one pass
     (fixture mode; the store path is equivalence-tested in
@@ -1513,67 +1520,31 @@ def incremental_minhash_dups(
     """
     from mpi_word_count_spark.operators import track_cache
 
-    flags = df.select(F.col(id_col).alias("doc_id"), batch_filter.alias("is_batch"))
+    flags = df.select("doc_id", batch_filter.alias("is_batch"))
     if corpus_signatures is None:
-        sig = minhash_signatures(df, num_hashes, n, id_col, text_col)
+        sig = minhash_signatures(df)
     else:
-        batch_sig = minhash_signatures(
-            df.filter(batch_filter), num_hashes, n, id_col, text_col
-        )
-        sig = corpus_signatures.unionByName(batch_sig)
+        sig = corpus_signatures.unionByName(minhash_signatures(df.filter(batch_filter)))
     sig = track_cache(sig)
-    tagged = band_keys(sig, num_hashes, num_bands).join(flags, "doc_id")
-    bb = tagged.filter(F.col("is_batch")).alias("bb")
-    other = tagged.alias("o")
+    tagged = band_keys(sig).join(flags, "doc_id")
     candidates = track_cache(
-        bb.join(
-            other,
-            (F.col("bb.band") == F.col("o.band"))
-            & (F.col("bb.key") == F.col("o.key"))
-            & (F.col("o.doc_id") != F.col("bb.doc_id"))
-            & (~F.col("o.is_batch") | (F.col("o.doc_id") < F.col("bb.doc_id"))),
+        batch_blocked_pairs(
+            tagged.filter(F.col("is_batch")),
+            tagged.filter(~F.col("is_batch")),
+            "doc_id",
+            ("band", "key"),
         )
-        .select(
-            F.col("bb.doc_id").alias("did"),
-            F.col("o.doc_id").alias("other"),
-            F.col("o.is_batch").alias("other_is_batch"),
-        )
-        .distinct()
     )
     passed = _verify_candidates_jaccard(
         df,
         candidates,
         sig.select("doc_id", "n_shingles"),
         threshold,
-        n,
-        id_col,
-        text_col,
         left="did",
         right="other",
         extra=("other_is_batch",),
-    ).select("did", "other", "other_is_batch")
-    agg = passed.groupBy("did").agg(
-        F.min(F.when(~F.col("other_is_batch"), F.col("other"))).alias("c_min"),
-        F.min(F.when(F.col("other_is_batch"), F.col("other"))).alias("b_min"),
-        F.count(F.lit(1)).cast("bigint").alias("n_matches"),
     )
-    status = (
-        F.when(F.col("c_min").isNotNull(), F.lit("dup_of_corpus"))
-        .when(F.col("b_min").isNotNull(), F.lit("dup_in_batch"))
-        .otherwise(F.lit("unique"))
-    )
-    return (
-        flags.filter(F.col("is_batch"))
-        .join(agg, flags.doc_id == agg.did, "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("c_min"), F.col("b_min")).alias("dup_of"),
-            status.alias("status"),
-            F.coalesce(F.col("n_matches"), F.lit(0).cast("bigint")).alias(
-                "n_matches"
-            ),
-        )
-    )
+    return _batch_status(flags, passed)
 
 
 def ppjoin_pairs(

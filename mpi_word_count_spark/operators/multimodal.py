@@ -328,6 +328,7 @@ def phash_dups(phash: DataFrame, max_hamming: int = PHASH_BANDS - 1) -> DataFram
             f"banded join guarantees recall only to {PHASH_BANDS - 1} bits"
         )
     from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators.dedup import blocked_pairs
 
     # the hash table feeds the band explode AND both verify sides —
     # cache it (5 ints/row) so the Arrow kernel runs once, not 3x
@@ -345,19 +346,8 @@ def phash_dups(phash: DataFrame, max_hamming: int = PHASH_BANDS - 1) -> DataFram
             )
         ).alias("band"),
     ).select("media_id", "band.band_idx", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_id_1"),
-            F.col("b.media_id").alias("media_id_2"),
-        )
-        .distinct()
+    cand = blocked_pairs(
+        bands, "media_id", ("band_idx", "band_val"), ("media_id_1", "media_id_2")
     )
     h1 = phash.select(
         F.col("media_id").alias("media_id_1"),

@@ -1103,27 +1103,16 @@ def q_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_lsh_dups verification shape with one extra 16-column
     comparison.
     """
-    from mpi_word_count_spark.functions.hashing import universal_coeffs  # noqa: F401
     from mpi_word_count_spark.operators.dedup import (
         band_keys,
+        blocked_pairs,
         minhash_signatures,
     )
     from mpi_word_count_spark.operators import track_cache
 
     docs = table(spark, "documents", sf_dir)
     sig = track_cache(minhash_signatures(docs))
-    bands = band_keys(sig)
-    bx, by = bands.alias("x"), bands.alias("y")
-    candidates = (
-        bx.join(
-            by,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
+    candidates = blocked_pairs(band_keys(sig), "doc_id", ("band", "key"))
     a, b = sig.alias("a"), sig.alias("b")
     matches = sum(
         F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mpi_word_count_spark.operators.dedup import (
@@ -867,3 +868,243 @@ def test_unpersist_local_ckpt_private_reach_pinned(spark):
     assert not lvl.useMemory() and not lvl.useDisk(), (
         "unpersist did not reach the checkpoint RDD"
     )
+
+
+# --- blocked_pairs / batch_blocked_pairs: the one candidate-pair path ----
+
+KEYS_SCHEMA = "doc_id long, band int, key string"
+
+
+def _pairs(df):
+    return sorted((r["d1"], r["d2"]) for r in df.collect())
+
+
+def test_blocked_pairs_empty_and_single_member_blocks(spark):
+    from mpi_word_count_spark.operators.dedup import blocked_pairs
+
+    empty = blocked_pairs(
+        spark.createDataFrame([], KEYS_SCHEMA), "doc_id", ("band", "key")
+    )
+    assert empty.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("d1", "bigint"),
+        ("d2", "bigint"),
+    ]
+    one = spark.createDataFrame([(1, 0, "k")], KEYS_SCHEMA)
+    assert blocked_pairs(one, "doc_id", ("band", "key")).count() == 0
+    # every block has one member: same key in different bands, same
+    # band with different keys — no pair
+    singles = spark.createDataFrame(
+        [(1, 0, "k"), (2, 1, "k"), (3, 0, "j")], KEYS_SCHEMA
+    )
+    assert blocked_pairs(singles, "doc_id", ("band", "key")).count() == 0
+
+
+def test_blocked_pairs_multi_block_collision_emitted_once(spark):
+    from mpi_word_count_spark.operators.dedup import blocked_pairs
+
+    keys = spark.createDataFrame(
+        # 7 and 3 collide in bands 0, 1 and 2; 5 meets 3 in band 2 only
+        [(7, 0, "a"), (3, 0, "a"), (7, 1, "b"), (3, 1, "b"),
+         (7, 2, "c"), (3, 2, "c"), (5, 2, "c"), (5, 0, "z")],
+        KEYS_SCHEMA,
+    )
+    got = blocked_pairs(keys, "doc_id", ("band", "key"))
+    assert got.columns == ["d1", "d2"]
+    assert _pairs(got) == [(3, 5), (3, 7), (5, 7)]
+
+
+def test_blocked_pairs_filter_drops_pair_whole(spark):
+    from mpi_word_count_spark.operators.dedup import blocked_pairs
+
+    keys = spark.createDataFrame(
+        [(1, 0, "a", 10), (2, 0, "a", 11), (3, 0, "a", 50),
+         (1, 1, "b", 10), (3, 1, "b", 50)],
+        KEYS_SCHEMA + ", w int",
+    )
+    got = blocked_pairs(
+        keys,
+        "doc_id",
+        ("band", "key"),
+        pair_filter=lambda a, b: F.abs(F.col("a.w") - F.col("b.w")) <= 5,
+    )
+    # (1,3) collides in two bands and fails the filter in both
+    assert _pairs(got) == [(1, 2)]
+
+
+def _batch_rows(df):
+    return sorted((r["did"], r["other"], r["other_is_batch"]) for r in df.collect())
+
+
+def test_batch_blocked_pairs_equals_blocked_pairs_on_union(spark):
+    import random
+
+    from mpi_word_count_spark.operators.dedup import (
+        batch_blocked_pairs,
+        blocked_pairs,
+    )
+
+    rnd = random.Random(3)
+    rows = [
+        (i, band, rnd.choice("abc"))
+        for i in range(1, 25)
+        for band in range(3)
+    ]
+    batch_ids = {i for i in range(1, 25) if i % 4 == 0}
+    keys = spark.createDataFrame(rows, KEYS_SCHEMA)
+    batch = keys.filter(F.col("doc_id") % 4 == 0)
+    store = keys.filter(F.col("doc_id") % 4 != 0)
+    got = _batch_rows(batch_blocked_pairs(batch, store, "doc_id", ("band", "key")))
+    assert got, "fixture produced no candidate pairs"
+    # no (x, x) pair, and other_is_batch says where `other` lives
+    assert all(did != other for did, other, _ in got)
+    assert all(did in batch_ids for did, _, _ in got)
+    assert all(flag == (other in batch_ids) for _, other, flag in got)
+    # in-batch pairs are owned by the larger id
+    assert all(other < did for did, other, flag in got if flag)
+    # the same pairs as the full self-join, restricted to batch pairs
+    full = _pairs(blocked_pairs(keys, "doc_id", ("band", "key")))
+    want = [p for p in full if batch_ids & set(p)]
+    assert sorted(tuple(sorted((d, o))) for d, o, _ in got) == want
+    assert len(got) == len(want)  # distinct: one row per pair
+
+
+def test_batch_blocked_pairs_empty_batch(spark):
+    from mpi_word_count_spark.operators.dedup import batch_blocked_pairs
+
+    store = spark.createDataFrame([(1, 0, "a"), (2, 0, "a")], KEYS_SCHEMA)
+    empty = spark.createDataFrame([], KEYS_SCHEMA)
+    got = batch_blocked_pairs(empty, store, "doc_id", ("band", "key"))
+    assert got.columns == ["did", "other", "other_is_batch"]
+    assert got.count() == 0
+
+
+# --- pigeonhole bandings vs brute force (hypothesis) ----------------------
+
+_VOCAB = ["ant", "bee", "cat", "dog", "elk", "fox", "gnu", "hen", "ibis", "jay"]
+
+
+def test_simhash_banded_equals_allpairs_every_distance(spark):
+    """Pigeonhole banding is exact for EVERY max_hamming, not just the
+    registered d=8: on random near-duplicate corpora the banded plan
+    returns precisely simhash_dup_pairs' pairs for d = 0..8."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from mpi_word_count_spark.operators import release_caches
+    from mpi_word_count_spark.operators.dedup import simhash_banded_pairs
+
+    words = st.lists(st.sampled_from(_VOCAB), min_size=1, max_size=10)
+    edits = st.lists(
+        st.tuples(st.integers(0, 5), st.integers(0, 9), st.sampled_from(_VOCAB)),
+        max_size=8,
+    )
+
+    @settings(max_examples=3, deadline=None)
+    @given(st.lists(words, min_size=1, max_size=6), edits)
+    def check(bases, muts):
+        # near-duplicates: copies of a base doc with one token replaced
+        docs = [" ".join(b) for b in bases]
+        for base, pos, w in muts:
+            toks = list(bases[base % len(bases)])
+            toks[pos % len(toks)] = w
+            docs.append(" ".join(toks))
+        df = spark.createDataFrame(
+            list(enumerate(docs)), "doc_id long, text string"
+        )
+        allp = {
+            (r["d1"], r["d2"], r["hamming"])
+            for r in simhash_dup_pairs(df, max_hamming=8).collect()
+        }
+        for d in range(9):
+            banded = {
+                (r["d1"], r["d2"], r["hamming"])
+                for r in simhash_banded_pairs(df, max_hamming=d).collect()
+            }
+            release_caches()
+            assert banded == {p for p in allp if p[2] <= d}, d
+
+    check()
+
+
+def test_phash_dups_equals_allpairs_popcount(spark):
+    """dHash band pigeonhole (4 × 16-bit bands) is exact up to 3 bits:
+    phash_dups equals the all-pairs popcount for every max_hamming in
+    0..3 on random hash tables with planted near-copies."""
+    from itertools import combinations
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from mpi_word_count_spark.operators import release_caches
+    from mpi_word_count_spark.operators.multimodal import phash_dups
+
+    band = st.integers(0, (1 << 16) - 1)
+    flips = st.lists(st.integers(0, 63), max_size=5)
+
+    @settings(max_examples=4, deadline=None)
+    @given(
+        st.lists(st.tuples(band, band, band, band), min_size=1, max_size=6),
+        st.lists(st.tuples(st.integers(0, 5), flips), max_size=10),
+    )
+    def check(bases, copies):
+        hashes = [list(b) for b in bases]
+        for base, bits in copies:
+            h = list(bases[base % len(bases)])
+            for bit in bits:
+                h[bit // 16] ^= 1 << (bit % 16)
+            hashes.append(h)
+        rows = [(i, *h) for i, h in enumerate(hashes)]
+        df = spark.createDataFrame(
+            rows, "media_id long, b0 int, b1 int, b2 int, b3 int"
+        )
+        dist = {
+            (a[0], b[0]): sum(bin(x ^ y).count("1") for x, y in zip(a[1:], b[1:]))
+            for a, b in combinations(rows, 2)
+        }
+        for d in range(4):
+            got = {
+                (r["media_id_1"], r["media_id_2"], r["hamming"])
+                for r in phash_dups(df, max_hamming=d).collect()
+            }
+            release_caches()
+            assert got == {(a, b, h) for (a, b), h in dist.items() if h <= d}, d
+
+    check()
+
+
+# --- partition invariance of every blocked-pair consumer ------------------
+
+BLOCKED_PAIR_QUERIES = (
+    "minhash_lsh_dups",
+    "dedup_clusters",
+    "simhash_dups",
+    "simhash_banded_dups",
+    "embedding_dups",
+    "incremental_minhash_dups",
+    "incremental_embedding_dups",
+    "media_phash_dups",
+    "minhash_estimate_audit",
+)
+
+
+@pytest.mark.parametrize("name", BLOCKED_PAIR_QUERIES)
+def test_blocked_pair_queries_partition_invariant(spark, name):
+    """An odd shuffle-partition count (7, vs the session's 8) must not
+    change any candidate-pair consumer's oracle-checked result."""
+    import __spark_entry__ as entrymod
+    from mpi_word_count_spark.operators import release_caches
+    from mpi_word_count_spark.oracle import compare
+    from tests.conftest import SF_DIR
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        ok, msg = compare(
+            spark, entrymod.queries()[name], entrymod.oracle_sql()[name], SF_DIR
+        )
+    finally:
+        spark.conf.set(key, old)
+        release_caches()
+    assert ok, f"{name}: {msg}"
